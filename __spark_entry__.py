@@ -31,8 +31,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _input_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table — the scale statistic for adaptive plan
-    choices (single parquet file or a directory of part files)."""
+    """On-disk size of a table in BYTES of parquet (single file or a
+    directory of part files), not rows — the scale statistic for
+    adaptive plan choices."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
@@ -733,9 +734,11 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB oracle + the edge-semantics tests. The worker path carries
     # ~0.2 s of fixed Arrow/worker spawn cost, so the plan is chosen by
     # input size (scale-adaptive, like AQE — NOT a constant tuned to one
-    # bench size): below a few MB of parquet the JVM expression path is
-    # strictly cheaper, above it the per-doc regex cost dominates and
-    # the worker wins severalfold. Both paths are parity-locked by
+    # bench size): below 3 MB of parquet bytes (compressed on-disk size,
+    # not a row count: sf0.1 `documents` is ~0.6 MB and takes the JVM
+    # path, sf1.0 takes the worker) the JVM expression path is strictly
+    # cheaper, above it the per-doc regex cost dominates and the worker
+    # wins severalfold. Both paths are parity-locked by
     # tests/test_text_functions.py::test_token_counts_frame_matches_jvm_columns.
     docs = _t(spark, sf_dir, "documents")
     if _input_bytes(sf_dir, "documents") < 3 * 1024 * 1024:
@@ -1080,44 +1083,14 @@ def q_simhash_fast_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash simhash, driver-gated EXACTLY: the JVM
-    SQL-expression bit algebra vs an independent numpy bit-vote
-    implementation (same xxhash64 token hashes computed JVM-side, sign
-    voting + bit assembly re-derived in vectorized numpy inside a pandas
-    UDF). Symmetric diff must return ZERO rows."""
-    import numpy as np
-    import pandas as pd
-
-    from borges_spark.functions.text import SIMHASH_BITS, fast_hash60_col
-
+    """Production-hash simhash, gated EXACTLY by a zero-row oracle: the
+    production numpy vote fold (impl='np', what q_simhash_fast_raw
+    times) vs the independent JVM SQL-expression bit algebra
+    (impl='expr'), both over the same xxhash64 token hashes. Symmetric
+    diff must return ZERO rows."""
     docs = _t(spark, sf_dir, "documents")
-    # impl='expr' keeps this arm the INDEPENDENT JVM-expression fold:
-    # the production default (impl='np', what q_simhash_fast_raw times)
-    # is the same numpy vote algebra as np_path below, so gating expr
-    # vs np here proves the production path transitively without the
-    # gate ever comparing an implementation against itself
     expr_path = D.simhash_table(docs, hash_mode="fast", impl="expr")
-
-    toks = F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-    hashed = docs.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    ).select("doc_id", F.transform(toks, lambda t: fast_hash60_col(t)).alias("hs"))
-
-    def _np_simhash(hs):
-        out = []
-        for arr in hs:
-            a = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            bits = (a[:, None] >> np.arange(SIMHASH_BITS, dtype=np.uint64)[None, :]) & np.uint64(1)
-            votes = 2 * bits.sum(axis=0, dtype=np.int64) - len(a)
-            sim = np.sum((votes > 0).astype(np.uint64) << np.arange(SIMHASH_BITS, dtype=np.uint64))
-            out.append(int(sim))
-        return pd.Series(out, dtype="int64")
-
-    # explicit return-type form: the module uses postponed annotations,
-    # so hint-inferred pandas_udf signatures don't resolve here
-    np_simhash = F.pandas_udf(_np_simhash, "long")
-
-    np_path = hashed.select("doc_id", np_simhash("hs").alias("simhash"))
+    np_path = D.simhash_table(docs, hash_mode="fast", impl="np")
     return expr_path.exceptAll(np_path).unionByName(np_path.exceptAll(expr_path))
 
 
@@ -1153,66 +1126,15 @@ WHERE a.doc_id < b.doc_id
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard near-dups with rare-shingle candidate generation
-    (df <= 20 bounds the self-join linearly — see operators/dedup.py);
-    integer outputs + integer threshold (n_inter*10 >= 8*union) so no
-    float crosses engines."""
-    docs = _t(spark, sf_dir, "documents")
-    max_df = 20
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    # ONE pass does all the string work — the vectorized numpy rolling
-    # hash (dedup.shingle_hash_frame; the JVM higher-order-function
-    # expression evaluates interpreted and measured ~5x slower) —
-    # snapshotted as per-doc distinct-HASH ARRAYS and persist()ed: the
-    # plan is depth-2 and consumed in one action, so cache substitution
-    # reuses the single materialization without r4's eager-checkpoint
-    # job (~1.5 s of the query wall at sf0.1). Candidate pairs expand
-    # IN-ROW from each rare shingle's bounded doc list (<= max_df, so
-    # the collect_list buffer is bounded and pair output is
-    # <= C(max_df,2) per shingle — the scale-safe shape); the exact
-    # verify pulls both docs' hash SETS per pair and intersects them
-    # in-row (array_intersect), replacing two joins over the full
-    # exploded shingle table with joins probed by the (always-small)
-    # candidate set. Counts stay identical to the string-keyed DuckDB
-    # oracle barring 2^-64-scale hash collisions (byte-window ==
-    # char-window shingles on this ASCII corpus — see
-    # shingle_hash_frame's docstring). At 100 TB the snapshot is a
-    # shingle TABLE.
-    arr = D.shingle_hash_frame(docs).persist()
-    sh = arr.select(F.col("doc_id"), F.explode("hs").alias("sh"))
-    rare = sh.groupBy("sh").agg(F.count("*").alias("df")).filter(F.col("df") <= max_df).select("sh")
-    rare_docs = (
-        sh.join(rare, "sh")
-        .groupBy("sh")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-    )
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
-    cand = (
-        rare_docs.select(F.explode(pair_expr).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
-    a = arr.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
-    b = arr.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("hs_a", "hs_b")).alias("n_inter"),
-            F.size("hs_a").alias("sz_a"),
-            F.size("hs_b").alias("sz_b"),
-        )
-        .filter(F.col("n_inter") * 10 >= (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")) * 8)
-    )
+    (df <= 20 bounds the self-join linearly — see
+    dedup.ngram_candidate_counts); integer outputs + integer threshold
+    (n_inter*10 >= 8*union) so no float crosses engines. Counts stay
+    identical to the string-keyed DuckDB oracle barring 2^-64-scale
+    hash collisions (byte-window == char-window shingles on this ASCII
+    corpus — see shingle_hash_frame's docstring)."""
+    c = D.ngram_candidate_counts(_t(spark, sf_dir, "documents"), max_df=20)
+    union = F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
+    return c.filter(F.col("n_inter") * 10 >= union * 8)
 
 
 _NGRAM_JACCARD_SQL = f"""

@@ -79,8 +79,3 @@ def clean_journal_title_udf(s: pd.Series) -> pd.Series:
 @F.pandas_udf(T.DoubleType())
 def similarity_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([similarity_ratio(x, y) for x, y in zip(a, b)])
-
-
-@F.pandas_udf(T.StringType())
-def splice_abstract_udf(full: pd.Series, abstract: pd.Series) -> pd.Series:
-    return pd.Series([splice_abstract(f or "", a or "") for f, a in zip(full, abstract)])

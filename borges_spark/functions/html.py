@@ -20,20 +20,13 @@ Semantics (frozen, tested against golden fixtures and the generator):
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from urllib.parse import urljoin
-
-import pandas as pd
 
 from borges_spark.functions.urls import canonicalize_url_py
 
 _META_RE = re.compile(r'<meta\s+charset="([^"]+)"', re.IGNORECASE)
 _P_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 _A_RE = re.compile(r'<a\s+href="([^"]*)"', re.IGNORECASE)
-
-PARSED_SCHEMA = (
-    "url string, status int, text string, links array<string>, n_links int"
-)
 
 
 def decode_html(raw: bytes | None) -> str:
@@ -60,23 +53,3 @@ def extract_links(page_url: str, html: str) -> list[str]:
         out.append(canonicalize_url_py(urljoin(page_url, href)))
     return out
 
-
-def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    htmls = [decode_html(h) for h in pdf["html"]]
-    texts = [extract_text(h) for h in htmls]
-    links = [extract_links(u, h) for u, h in zip(pdf["url"], htmls)]
-    return pd.DataFrame(
-        {
-            "url": pdf["url"].values,
-            "status": pdf["status"].values,
-            "text": texts,
-            "links": links,
-            "n_links": [len(ls) for ls in links],
-        }
-    )
-
-
-def parse_pages_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (url, status, html) batches -> PARSED_SCHEMA."""
-    for pdf in it:
-        yield _parse_batch(pdf)

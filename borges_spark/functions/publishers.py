@@ -540,7 +540,6 @@ _AIP_AUTHOR_BLOCK_RE = re.compile(
     r'class="hlFld-ContribAuthor"[^>]*>(.*?)</(?:span|div)>', re.DOTALL
 )  # :121-126
 _AIP_A_RE = re.compile(r"<a[^>]*>(.*?)</a>", re.DOTALL)
-_AIP_PDF_RE = re.compile(r'class="show-pdf"[^>]*href="([^"]+)"')  # :128-130
 
 
 def extract_aip_listing(doc_id: str, raw: bytes) -> list[dict]:

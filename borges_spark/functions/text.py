@@ -15,6 +15,8 @@ first 15 hex chars as an integer —
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -37,6 +39,34 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 SIMHASH_BITS = 60  # fits the cross-engine 60-bit hash
 SHINGLE_LEN = 5  # character shingles
 MINHASH_PERMS = 8
+
+
+# ---------------------------------------------------------------------------
+# whitespace kernel for the Python workers
+#
+# Every worker that splits or collapses whitespace goes through the two
+# helpers below, so all of them agree with the JVM expressions they
+# replace. The class is exactly what Java's \s compiles to, which is
+# what Spark's split/regexp_replace on '\s+' match. Python's own \s and
+# str.split() also match Unicode whitespace (NBSP, U+2028, U+0085,
+# \x1c-\x1f) and must not be used. DuckDB's RE2 \s agrees with this class
+# on every character except VT (\x0b), which RE2 does not treat as
+# whitespace: a DuckDB oracle splits differently only on text with VT.
+
+_WS_CHARS = r" \t\n\x0b\f\r"
+_WS_RUN = re.compile(f"[{_WS_CHARS}]+")
+
+
+def normalize_ws(text: str) -> str:
+    """lower(text) with every whitespace run collapsed to one space ==
+    Spark regexp_replace(lower(c), '\\s+', ' ')."""
+    return _WS_RUN.sub(" ", text.lower())
+
+
+def split_words(text: str) -> list[str]:
+    """The non-empty tokens of lower(text) == Spark
+    filter(split(lower(c), '\\s+'), t -> t != '')."""
+    return [w for w in _WS_RUN.split(text.lower()) if w]
 
 
 # ---------------------------------------------------------------------------
@@ -172,19 +202,17 @@ def token_counts_frame(docs, text_col: str = "text", id_col: str = "doc_id"):
     token_count_col/bpe_ish_token_count_col by construction:
 
       - trim strips SPACES only (Spark F.trim semantics);
-      - the split delimiter is the explicit ASCII class Java's \\s
-        compiles to, and Spark's split(limit=-1) KEEPS a trailing empty
-        token (unlike Java String.split) — Python re.split does too;
+      - the split delimiter is the kernel's _WS_RUN, and Spark's
+        split(limit=-1) KEEPS a trailing empty token (unlike Java
+        String.split) — Python re.split does too, which is why this
+        count cannot use split_words;
       - '' after trim counts 0; null text yields null counts;
       - the subword alternation regex is shared verbatim (Python and
         Java agree on these explicit ASCII classes for any input).
 
     Pinned by the driver's token_count DuckDB oracle and the edge-case
     suite in tests/test_text_functions.py."""
-    import re
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    bpe = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
+    bpe = re.compile(f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{_WS_CHARS}]")
     out_schema = f"{id_col} bigint, n_tokens int, n_subword_tokens int"
 
     def gen(it):
@@ -198,7 +226,7 @@ def token_counts_frame(docs, text_col: str = "text", id_col: str = "doc_id"):
                     n_sub.append(None)
                     continue
                 tr = t.strip(" ")
-                n_tok.append(0 if tr == "" else len(ws.split(tr)))
+                n_tok.append(0 if tr == "" else len(_WS_RUN.split(tr)))
                 n_sub.append(len(bpe.findall(t)))
             yield pd.DataFrame(
                 {
@@ -434,12 +462,10 @@ def repetition_stats_frame(docs, text_col: str = "text", id_col: str = "doc_id")
     )
 
     def gen(it):
-        import re
         from collections import Counter
 
         import pandas as pd
 
-        _ws_ascii = re.compile(r"[ \t\n\x0b\f\r]+")
         for pdf in it:
             rows = []
             for i, t in zip(pdf[id_col], pdf[text_col]):
@@ -451,9 +477,7 @@ def repetition_stats_frame(docs, text_col: str = "text", id_col: str = "doc_id")
                 dup_extra = sum(c - 1 for c in lc.values() if c >= 2)
                 line_chars = sum(len(ln) for ln in lines)
                 dup_chars_extra = sum(len(ln) * (c - 1) for ln, c in lc.items() if c >= 2)
-                # explicit ASCII \s class == the DuckDB twin's regex
-                # (str.split() would also split on Unicode whitespace)
-                words = [w for w in _ws_ascii.split(t.lower()) if w]
+                words = split_words(t)
                 n_word_chars = sum(len(w) for w in words)
                 if len(words) >= 2:
                     g2 = Counter(" ".join(p) for p in zip(words, words[1:]))
@@ -536,17 +560,3 @@ def zfill3_col(c: Column) -> Column:
     Unlike lpad, zfill never truncates longer values."""
     s = c.cast("string")
     return F.when(F.length(s) >= 3, s).otherwise(F.lpad(s, 3, "0"))
-
-
-def zfill3_sql(expr: str) -> str:
-    s = f"CAST({expr} AS VARCHAR)"
-    return f"(CASE WHEN length({s}) >= 3 THEN {s} ELSE lpad({s}, 3, '0') END)"
-
-
-def normalize_ws_col(c: Column) -> Column:
-    """' '.join(s.split()) — whitespace collapse (article_xml_extractor.py:201)."""
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
-def normalize_ws_sql(expr: str) -> str:
-    return f"trim(regexp_replace({expr}, '\\s+', ' ', 'g'))"

@@ -19,11 +19,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from borges_spark.functions.text import (
+    MINHASH_P,
     MINHASH_PERMS,
+    MINHASH_X_MOD,
     SHINGLE_LEN,
     SIMHASH_BITS,
     fingerprint_col,
-    hash60_col,
+    minhash_perm_consts,
+    normalize_ws,
+    split_words,
 )
 
 # ---------------------------------------------------------------------------
@@ -56,25 +60,6 @@ def shingles_col(text_col: Column, k: int = SHINGLE_LEN) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(norm, i, k)))
 
 
-def shingle_hashes_col(text_col: Column, k: int = SHINGLE_LEN) -> Column:
-    """Distinct xxhash64 values of the character k-gram shingles —
-    hash-first: each k-gram substring is hashed as it is produced and
-    the dedup runs over LONGS, which skips materializing a distinct
-    k-char string array per doc. Set-equivalent to
-    transform(shingles_col(...), xxhash64) barring 2^-64-scale hash
-    collisions (the same caveat every hashed consumer already carries).
-
-    NOTE: higher-order functions (sequence/transform/array_distinct)
-    do not participate in whole-stage codegen — they evaluate
-    interpreted, per element. For the shingle hot path prefer
-    shingle_hash_frame below (vectorized rolling hash, ~5x); this
-    column stays as the pure-JVM expression form (exact CHARACTER
-    shingles on any input, no Python workers)."""
-    norm = F.regexp_replace(F.lower(text_col), r"\s+", " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.xxhash64(F.substring(norm, i, k))))
-
-
 _POLY_BASE = 1099511628211  # FNV-1a prime: odd, full-period mod 2^64
 
 
@@ -84,13 +69,11 @@ def _rolling_hash_doc(text: str | None, k: int):
     hash of every window at once, then a splitmix64 finalizer
     decorrelates the polynomial structure and np.unique dedups.
     Returns int64 array (Arrow list<long>-ready), or None for null."""
-    import re
-
     import numpy as np
 
     if text is None:
         return None
-    b = np.frombuffer(re.sub(r"\s+", " ", text.lower()).encode(), dtype=np.uint8)
+    b = np.frombuffer(normalize_ws(text).encode(), dtype=np.uint8)
     n = len(b)
     base = np.uint64(_POLY_BASE)
     if n <= k:
@@ -121,7 +104,8 @@ def shingle_hash_frame(docs: DataFrame, text_col: str = "text",
     interpreted per element while this path does k multiply-adds over
     whole arrays.
 
-    Semantics: windows are k BYTES of the UTF-8 normalized text —
+    Semantics: windows are k BYTES of the UTF-8 text normalized by
+    functions.text.normalize_ws (only the JVM's ASCII \\s collapses) —
     identical to k CHARACTER shingles for ASCII corpora (all testdata
     and oracle corpora are ASCII-checked); non-ASCII text keeps
     internally consistent near-dup sets but diverges from a
@@ -190,179 +174,115 @@ def _xxh64_long_vec(values, seed: int):
     return h
 
 
-def minhash_wide_oracle_frame(docs: DataFrame, text_col: str = "text",
-                              id_col: str = "doc_id", n_perms: int = MINHASH_PERMS,
-                              k: int = SHINGLE_LEN) -> DataFrame:
-    """(id, h0..h{n-1}) — the ORACLE-hash minhash signature computed in
-    the Python worker instead of the former explode + md5-expression +
-    wide min-agg JVM plan (guide §4.2: hand whole batches to native
-    code; §2.4: the per-doc minima need no shuffle at all).
+def _md5_affine_signer(n_perms: int, k: int):
+    """Oracle-mode per-doc signature: the 60-bit md5 of every distinct
+    CHARACTER shingle (the int of the first 15 hex chars == the first 8
+    digest bytes >> 4, exactly what hash60_col compiles to) mod 2^30,
+    spread by the affine family from minhash_perm_consts. Every
+    intermediate fits uint64 exactly (x < 2^30, a,b < 2^31), so the
+    DuckDB oracle (same md5, same constants) gates the values exactly.
 
-    Value-identical to the JVM formulation by construction: the 60-bit
-    hash is the same md5 reinterpretation hash60_col compiles to
-    (int of the first 15 hex chars == first 8 digest bytes >> 4), the
-    affine family comes from the same minhash_perm_consts table, and
-    every intermediate fits uint64 exactly (x < 2^30, a,b < 2^31).
-    The DuckDB oracle (same md5, same constants) gates it exactly.
+    The md5 cache exploits the dup-heavy shape of real corpora:
+    duplicated shingles hash once per task, and the cache is size-capped
+    so a pathological vocabulary cannot grow it unbounded."""
+    import hashlib
 
-    Whitespace/lowercase normalization uses the explicit ASCII class
-    Java's \\s compiles to ([ \\t\\n\\x0b\\f\\r]) — identical to the JVM
-    path on any input whose text is ASCII (all testdata corpora are;
-    same documented caveat as shingle_hash_frame).
-
-    The per-task md5 cache exploits the dup-heavy shape of real
-    corpora: duplicated shingles hash once per task, and the cache is
-    size-capped so a pathological vocabulary cannot grow it unbounded.
-    """
-    from borges_spark.functions.text import (
-        MINHASH_P,
-        MINHASH_X_MOD,
-        minhash_perm_consts,
-    )
+    import numpy as np
 
     consts = minhash_perm_consts(n_perms)
-    out_schema = f"{id_col} bigint, " + ", ".join(f"h{i} bigint" for i in range(n_perms))
+    A = np.array([a for a, _ in consts], dtype=np.uint64)[:, None]
+    B = np.array([b for _, b in consts], dtype=np.uint64)[:, None]
+    P = np.uint64(MINHASH_P)
+    x_mask = MINHASH_X_MOD - 1  # power of two: % == bitmask
+    cache: dict[str, int] = {}
 
-    def gen(it):
-        import hashlib
-        import re
+    def sign(text: str):
+        norm = normalize_ws(text)
+        xs = []
+        for s in {norm[j : j + k] for j in range(max(len(norm) - k + 1, 1))}:
+            x = cache.get(s)
+            if x is None:
+                x = (int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4) & x_mask
+                if len(cache) < (1 << 22):
+                    cache[s] = x
+            xs.append(x)
+        xv = np.asarray(xs, dtype=np.uint64)[None, :]
+        return ((A * xv + B) % P).min(axis=1).astype(np.int64)
 
-        import numpy as np
-        import pandas as pd
+    return sign
 
-        md5 = hashlib.md5
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        A = np.array([a for a, _ in consts], dtype=np.uint64)[:, None]
-        B = np.array([b for _, b in consts], dtype=np.uint64)[:, None]
-        P = np.uint64(MINHASH_P)
-        x_mask = MINHASH_X_MOD - 1  # power of two: % == bitmask
-        cache: dict[str, int] = {}
-        for pdf in it:
-            ids, mins = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    # JVM parity: a null text still yields a row (its
-                    # single shingle is NULL, so every min is NULL)
-                    ids.append(int(i))
-                    mins.append([None] * n_perms)
-                    continue
-                norm = ws.sub(" ", t.lower())
-                end = max(len(norm) - k + 1, 1)
-                xs = []
-                seen: set[str] = set()
-                for j in range(end):
-                    s = norm[j : j + k]
-                    if s in seen:
-                        continue
-                    seen.add(s)
-                    x = cache.get(s)
-                    if x is None:
-                        x = (int.from_bytes(md5(s.encode()).digest()[:8], "big") >> 4) & x_mask
-                        if len(cache) < (1 << 22):
-                            cache[s] = x
-                    xs.append(x)
-                xv = np.asarray(xs, dtype=np.uint64)[None, :]
-                ids.append(int(i))
-                mins.append(((A * xv + B) % P).min(axis=1).astype(np.int64).tolist())
-            if ids:
-                data = {id_col: np.asarray(ids, dtype=np.int64)}
-                for j in range(n_perms):
-                    data[f"h{j}"] = pd.array(
-                        [m[j] for m in mins], dtype="Int64"
-                    )
-                yield pd.DataFrame(data)
 
-    return docs.select(id_col, text_col).mapInPandas(gen, out_schema)
+def _xxh64_signer(n_perms: int, k: int):
+    """Fast-mode per-doc signature: rolling-hash shingles, then perm i's
+    minimum of shiftrightunsigned(xxhash64(int(i), sh), 4) through the
+    bit-exact worker replica of Spark's XXH64 (the q:minhash_lsh_fast
+    diff gate proves the values against the JVM formulation)."""
+    import numpy as np
+
+    seeds = [_xxh64_int_scalar(i) for i in range(n_perms)]
+
+    def sign(text: str):
+        u = _rolling_hash_doc(text, k).view(np.uint64)
+        return np.array(
+            [(_xxh64_long_vec(u, s) >> np.uint64(4)).min() for s in seeds], dtype=np.uint64
+        ).astype(np.int64)
+
+    return sign
 
 
 def minhash_wide_frame(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n_perms: int = MINHASH_PERMS,
-                       k: int = SHINGLE_LEN) -> DataFrame:
-    """(id, h0..h{n-1}) — the fast-path minhash signature computed
-    END-TO-END in the numpy worker: rolling-hash shingles, then all
-    n_perms xxhash64 spreads + minima over the in-memory hash array.
-    Values are BIT-IDENTICAL to the JVM formulation
-    shiftrightunsigned(xxhash64(int(i), sh), 4) min-aggregated over
-    exploded shingle rows (the q:minhash_lsh_fast diff gate proves it),
-    but nothing explodes: the JVM path shipped n_docs x n_shingles rows
-    through 16 codegen'd hash calls and a wide min-agg shuffle; this
-    path ships one row per doc and shuffles nothing."""
-    seeds = [_xxh64_int_scalar(i) for i in range(n_perms)]
+                       k: int = SHINGLE_LEN, hash_mode: str = "oracle") -> DataFrame:
+    """(id, h0..h{n-1}) — all n permutation minima of each doc, computed
+    end-to-end in one numpy worker pass: one row per doc out, zero
+    shuffle.
+
+    Permutations are the universal affine family h_i(x) = (a_i*x + b_i)
+    mod p over ONE base hash x per shingle in 'oracle' mode
+    (_md5_affine_signer: md5-60bit of character shingles, reproduced
+    exactly by the DuckDB oracle), and n_perms xxhash64 spreads of the
+    rolling-hash shingles in 'fast' mode (_xxh64_signer, the deployment
+    path). Both normalize with functions.text.normalize_ws.
+
+    A null text yields a row whose minima are all NULL, in both modes:
+    the DuckDB minhash_signature oracle has that row (its one shingle
+    is NULL). NULL band values never satisfy the LSH equi-join, so a
+    null-text doc forms no pair."""
+    make_signer = {"oracle": _md5_affine_signer, "fast": _xxh64_signer}[hash_mode]
     out_schema = f"{id_col} bigint, " + ", ".join(f"h{i} bigint" for i in range(n_perms))
 
     def gen(it):
         import numpy as np
         import pandas as pd
 
+        sign = make_signer(n_perms, k)  # once per task: the oracle cache lives here
         for pdf in it:
-            ids, mins = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                hs = _rolling_hash_doc(t, k)
-                if hs is None:
-                    continue
-                u = hs.view(np.uint64)
-                ids.append(i)
-                mins.append(
-                    [int(( _xxh64_long_vec(u, s) >> np.uint64(4)).min()) for s in seeds]
-                )
-            if ids:
-                arr = np.asarray(mins, dtype=np.int64)
-                data = {id_col: np.asarray(ids, dtype=np.int64)}
-                for j in range(n_perms):
-                    data[f"h{j}"] = arr[:, j]
-                yield pd.DataFrame(data)
+            null = pdf[text_col].isna().to_numpy()
+            mins = np.zeros((n_perms, len(pdf)), dtype=np.int64)
+            for r, t in enumerate(pdf[text_col]):
+                if not null[r]:
+                    mins[:, r] = sign(t)
+            data = {id_col: pdf[id_col]}
+            for j in range(n_perms):
+                data[f"h{j}"] = pd.arrays.IntegerArray(mins[j], null)
+            yield pd.DataFrame(data)
 
-    return docs.select(id_col, text_col).mapInPandas(gen, out_schema)
-
-
-def _minhash_wide(docs: DataFrame, text_col: str, id_col: str, n_perms: int,
-                  hash_mode: str = "oracle") -> DataFrame:
-    """(id, h0..h{n-1}) — all n permutation minima in ONE pass over the
-    shingle rows: n hash columns per row, n min-aggregates map-side
-    combined. Avoids the naive perm-explode that multiplies the shuffle
-    by n_perms.
-
-    Permutations are the universal affine family h_i(x) = (a_i*x + b_i)
-    mod p over ONE base hash x per shingle (not one strong hash per
-    (shingle, perm) — r4's shape, which paid n_perms md5/xxhash string
-    passes per shingle row):
-
-      'oracle' — x = md5-60bit(shingle string) mod 2^30, p = 2^31-1;
-        every intermediate fits int64, so the DuckDB oracle reproduces
-        it exactly from the same (a_i, b_i) constant table.
-      'fast' — deployment path: vectorized rolling-hash shingles
-        (shingle_hash_frame, LONG values), spread per perm by a
-        worker-side bit-exact xxhash64 replica.
-
-    Both modes compute end-to-end in the numpy worker since r6
-    (minhash_wide_oracle_frame / minhash_wide_frame): one row per doc
-    out, zero shuffle.
-    """
     # spread docs across the cluster BEFORE the signature pass: a
     # single-row-group parquet source would otherwise pin the whole
     # worker stage (the dominant cost) onto one task
-    spark = docs.sparkSession
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, id_col)
-    if hash_mode == "fast":
-        # the whole signature is computed in the worker (see
-        # minhash_wide_frame): same values as the former JVM
-        # explode + 16x xxhash64 + wide min-agg, zero shuffle
-        return minhash_wide_frame(docs, text_col, id_col, n_perms)
-    # oracle mode: also fully worker-side since r6 (was: interpreted
-    # higher-order shingle transform + explode + md5 expression + wide
-    # min-agg shuffle — BatchEvalPython-free but ~10x slower; the DuckDB
-    # oracle pins the values either way)
-    return minhash_wide_oracle_frame(docs, text_col, id_col, n_perms)
+    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, id_col)
+    return docs.select(id_col, text_col).mapInPandas(gen, out_schema)
 
 
 def minhash_signature(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       n_perms: int = MINHASH_PERMS, hash_mode: str = "oracle") -> DataFrame:
-    """(id, perm, minhash) — perm i applies hash60(i || ':' || shingle).
+    """(id, perm, minhash) — minhash_wide_frame's signature, one row per
+    (doc, perm); a null text has NULL minima.
 
     shingle -> minhash -> band -> bucket-join is the classic pipeline;
     computed wide (one pass) then unpivoted to the long shape.
     """
-    wide = _minhash_wide(docs, text_col, id_col, n_perms, hash_mode)
+    wide = minhash_wide_frame(docs, text_col, id_col, n_perms, hash_mode=hash_mode)
     stack = ", ".join(f"{i}, h{i}" for i in range(n_perms))
     return wide.selectExpr(
         id_col, f"stack({n_perms}, {stack}) AS (perm, minhash)"
@@ -407,12 +327,19 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "do
     multiplicity up to 4), and by the all-bands-agree duplicate-partner
     test.
 
+    A null-text doc forms no pair, in either hash mode: its signature
+    row is all NULL (minhash_wide_frame) and NULL band values never
+    satisfy the equi-join. This matches the DuckDB oracle, whose
+    string_agg over NULL minima gives a NULL band hash. (The pre-r6
+    md5(concat_ws) band hash skipped NULLs, so it paired every null-text
+    doc with every other.)
+
     The signature subtree is persist()ed: both join sides consume it,
     and without the cache marker each side would re-run the worker
     signature pass (plan-identical subtrees do not share work across
     two Exchanges).
     """
-    wide = _minhash_wide(docs, text_col, id_col, n_perms, hash_mode).persist()
+    wide = minhash_wide_frame(docs, text_col, id_col, n_perms, hash_mode=hash_mode).persist()
     n_bands = n_perms // band_size
     vcols = [f"v{j}" for j in range(band_size)]
     sig = F.array(*[F.col(f"h{i}") for i in range(n_perms)])
@@ -525,7 +452,7 @@ def simhash_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     from borges_spark.functions.text import pick_hash60
 
     h60 = pick_hash60(hash_mode)
-    # parallelize past the source's row-group granularity (see _minhash_wide)
+    # parallelize past the source's row-group granularity (see minhash_wide_frame)
     spark = docs.sparkSession
     docs = docs.repartition(spark.sparkContext.defaultParallelism, id_col)
     toks = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
@@ -572,19 +499,20 @@ def simhash_neardup_pairs(docs: DataFrame, text_col: str = "text", id_col: str =
 # n-gram Jaccard
 
 
-def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        threshold: float = 0.8, k: int = SHINGLE_LEN,
-                        max_df: int = 20) -> DataFrame:
-    """Exact Jaccard over char-k-gram shingle sets, with scale-bounded
-    candidate generation.
+def ngram_candidate_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                           k: int = SHINGLE_LEN, max_df: int = 20) -> DataFrame:
+    """(id_a, id_b, n_inter, sz_a, sz_b) — the exact shingle-set
+    intersection and both set sizes for every candidate pair, id_a <
+    id_b: the count step under ngram_jaccard_pairs and q:ngram_jaccard,
+    which differ only in the threshold they filter with.
 
     A naive shingle self-join is Σ df(shingle)^2 rows — quadratic on
     template-heavy corpora. Candidates are instead generated only from
     *rare* shingles (document frequency <= max_df), which bounds the
-    join at max_df × total shingles (linear in corpus size); the
-    Jaccard value for each surviving pair is then verified EXACTLY over
-    the pair's full shingle sets. A pair sharing only ubiquitous
-    shingles is by definition template overlap, not near-duplication.
+    join at max_df × total shingles (linear in corpus size); the counts
+    for each surviving pair are then computed EXACTLY over the pair's
+    full shingle sets. A pair sharing only ubiquitous shingles is by
+    definition template overlap, not near-duplication.
 
     All string work happens ONCE, in the vectorized rolling-hash pass
     (shingle_hash_frame): each doc snapshots a distinct-hash ARRAY, so
@@ -599,7 +527,7 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
     materialization job up front (r4 measured the eager localCheckpoint
     at ~1.5 s of the query's wall at sf0.1).
     """
-    # parallelize past the source's row-group granularity (see _minhash_wide)
+    # parallelize past the source's row-group granularity (see minhash_wide_frame)
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, id_col)
     arr = shingle_hash_frame(docs, text_col, id_col, k).persist()
     sh = arr.select(F.col(id_col), F.explode("hs").alias("sh"))
@@ -640,20 +568,25 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "
     # pulls are one doc's shingles each (bounded by doc length).
     a = arr.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
     b = arr.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
-    jac = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("hs_a", "hs_b")).alias("n_inter"),
-            F.size("hs_a").alias("sz_a"),
-            F.size("hs_b").alias("sz_b"),
-        )
-        .withColumn("jaccard", F.round(F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
+    return cand.join(a, "id_a").join(b, "id_b").select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("hs_a", "hs_b")).alias("n_inter"),
+        F.size("hs_a").alias("sz_a"),
+        F.size("hs_b").alias("sz_b"),
     )
-    return jac.select("id_a", "id_b", "jaccard")
+
+
+def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                        threshold: float = 0.8, k: int = SHINGLE_LEN,
+                        max_df: int = 20) -> DataFrame:
+    """(id_a, id_b, jaccard) — exact Jaccard over char-k-gram shingle
+    sets for the rare-shingle candidates of ngram_candidate_counts,
+    kept when ROUND(jaccard, 6) >= threshold."""
+    c = ngram_candidate_counts(docs, text_col, id_col, k, max_df)
+    union = F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
+    jaccard = F.round(F.col("n_inter") / union, 6)
+    return c.select("id_a", "id_b", jaccard.alias("jaccard")).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -908,18 +841,16 @@ def _token_window_hashes(text: str | None, w: int):
     _rolling_hash_doc. Returns uint64 array of n_tokens - w + 1 window
     hashes (empty when the doc is shorter than w tokens), None for a
     null text."""
-    import re
     import zlib
 
     import numpy as np
 
     if text is None:
         return None
-    # explicit ASCII whitespace class (what Java/DuckDB \s+ matches in
-    # the oracle paths) — Python str.split() is Unicode-aware (NBSP,
-    # thin space, ...) and would tokenize differently on non-ASCII
-    # whitespace, silently breaking the substring_dedup_fast 0-row gate
-    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text.lower()) if t]
+    # the kernel tokenizer, not str.split(): the oracle path splits on
+    # the JVM's ASCII \s, and the substring_dedup_fast 0-row gate
+    # needs identical token positions
+    toks = split_words(text)
     n = len(toks)
     if n < w:
         return np.empty(0, dtype=np.uint64)
@@ -1008,7 +939,7 @@ def duplicated_spans(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     from pyspark.sql import Window
 
     spark = docs.sparkSession
-    # parallelize past the source's row-group granularity (see _minhash_wide)
+    # parallelize past the source's row-group granularity (see minhash_wide_frame)
     docs = docs.repartition(spark.sparkContext.defaultParallelism, id_col)
     if hash_mode == "oracle":
         # filter-empty after the split (not trim before): python .split()

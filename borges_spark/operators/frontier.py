@@ -13,9 +13,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def add_sequence(df: DataFrame, order_cols: list, col_name: str, start: int = 0) -> DataFrame:
-    return add_sequence_with_total(df, order_cols, col_name, start)[0]
+# HTTP statuses retried with backoff; every other non-200 status is
+# permanent
+TRANSIENT_STATUSES = (429, 500, 502, 503)
 
 
 def add_sequence_with_total(
@@ -257,7 +257,7 @@ def route_fetch_outcomes(
     next_allowed_round (and stage when multi-stage).
     """
     is_ok = F.col("status") == 200
-    is_transient = F.col("status").isin(429, 500, 502, 503)
+    is_transient = F.col("status").isin(*TRANSIENT_STATUSES)
     attempts_next = F.col("attempts") + 1
     retry = (~is_ok) & is_transient & (attempts_next < max_attempts)
     promote = (
@@ -296,6 +296,6 @@ def error_class_col() -> F.Column:
     """Crawl-log error class from HTTP status (Elsevier/paper_xml.py:79-90)."""
     return (
         F.when(F.col("status") == 200, F.lit(None).cast("string"))
-        .when(F.col("status").isin(429, 500, 502, 503), F.lit("transient"))
+        .when(F.col("status").isin(*TRANSIENT_STATUSES), F.lit("transient"))
         .otherwise(F.lit("permanent"))
     )

@@ -26,28 +26,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # 'image'|'audio'|'video'
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id string, kind string, n_bytes long, feature array<float>, decode_ok boolean"

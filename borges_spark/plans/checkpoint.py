@@ -24,11 +24,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-# On a deployment with the Iceberg runtime jar, set this True and route
-# write_snapshot/read through an Iceberg catalog (MERGE INTO + snapshot
-# ids). The jar is not in this image, so the Parquet+manifest protocol
-# below provides the same commit/resume semantics.
-_HAVE_ICEBERG = False
+# The Parquet+manifest protocol below stands in for an Iceberg catalog,
+# whose runtime jar is not available, and gives the same commit/resume
+# semantics.
 
 # Full-state-per-round datasets vs per-round increments: a time-travel
 # read resolves a SNAPSHOT dataset from exactly one committed round and

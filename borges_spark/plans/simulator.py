@@ -170,6 +170,8 @@ def simulate_crawl(
                 e.next_allowed_round = r + 1
             elif status == 200:
                 e.state = "fetched"
+            # spelled out, not frontier.TRANSIENT_STATUSES: the simulator
+            # is the independent reference arm of the engine equivalence gate
             elif status in (429, 500, 502, 503) and e.attempts < max_attempts:
                 e.state = "pending"
                 e.next_allowed_round = r + 1 + retry_backoff_rounds

@@ -21,6 +21,22 @@ _SHM_MIN_FREE_BYTES = 16 * 1024**3
 # under the shared local-dir root is a leak from a killed process.
 _SHM_STALE_SECONDS = 6 * 3600
 
+# Default driver-heap cap: 48g on a large box, but never more than 40% of
+# physical RAM. The heap is a cap, not an allocation, so G1 grows into it;
+# on a small box a 48g cap lets the JVM grow past the RAM it shares with
+# the Python workers and the kernel OOM-kills it mid-job.
+_MAX_DRIVER_HEAP_GB = 48
+_DRIVER_HEAP_RAM_FRACTION = 0.4
+
+
+def _default_driver_memory() -> str:
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return f"{_MAX_DRIVER_HEAP_GB}g"
+    gb = int(ram * _DRIVER_HEAP_RAM_FRACTION) // 1024**3
+    return f"{max(1, min(_MAX_DRIVER_HEAP_GB, gb))}g"
+
 
 def _sweep_stale_local_dirs(root: str) -> None:
     """Remove leaked Spark temp subdirs under the shared tmpfs root.
@@ -79,8 +95,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # heap cap, not an allocation: headroom cuts GC pressure when a
-        # drain round caches multi-GB parse output (box has 125G)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # drain round caches multi-GB parse output
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # keep task parallelism at bench/test data sizes: the 128MB scan
@@ -121,7 +138,7 @@ def get_spark(
     # session start sweeps stale subdirs (>6h old — nothing in this
     # sandbox runs one session that long) and falls back to the default
     # local dir when tmpfs headroom is too thin for shuffle to share RAM
-    # with the 48g driver heap (opt-out: BORGES_NO_SHM_LOCAL=1).
+    # with the driver heap (opt-out: BORGES_NO_SHM_LOCAL=1).
     if os.path.isdir("/dev/shm") and not os.environ.get("BORGES_NO_SHM_LOCAL"):
         local_dir = "/dev/shm/borges_spark_local"
         os.makedirs(local_dir, exist_ok=True)
@@ -136,9 +153,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

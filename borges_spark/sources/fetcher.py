@@ -22,9 +22,6 @@ import pandas as pd
 
 FETCHED_SCHEMA_SUFFIX = "status int, html binary"
 
-# statuses route_fetch_outcomes treats as transient (retry)
-_TRANSIENT = (429, 500, 502, 503)
-
 
 @dataclass(frozen=True)
 class LoginConfig:

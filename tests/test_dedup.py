@@ -313,26 +313,35 @@ def _old_minhash_wide_expr(docs):
 
 
 def test_minhash_oracle_worker_matches_jvm_expression(spark, docs):
-    from borges_spark.operators.dedup import minhash_wide_oracle_frame
-
     df = docs.unionByName(spark.createDataFrame(EDGE_TEXTS, "doc_id long, text string"))
-    got = {tuple(r) for r in minhash_wide_oracle_frame(df).collect()}
+    got = {tuple(r) for r in D.minhash_wide_frame(df, hash_mode="oracle").collect()}
     want = {tuple(r) for r in _old_minhash_wide_expr(df).collect()}
-    # null text rows are absent from both (explode drops null arrays)
+    # null-text docs appear in both outputs as all-NULL signature rows:
+    # shingles_col(NULL) is [NULL], so explode keeps one NULL shingle
     assert got == want
+    null_row = (14,) + (None,) * 8
+    assert null_row in got
+    # one null policy for both hash modes
+    fast = {tuple(r) for r in D.minhash_wide_frame(df, hash_mode="fast").collect()}
+    assert null_row in fast and len(fast) == len(got)
 
 
 def test_minhash_pairs_salted_join_matches_unsalted(spark, docs):
+    # two null-text docs: their all-NULL signatures must not pair with
+    # each other (or anything else) in either hash mode
+    nulls = spark.createDataFrame([(20, None), (21, None)], "doc_id long, text string")
+    df = docs.unionByName(nulls)
     for mode in ("oracle", "fast"):
         salted = {
             (r["id_a"], r["id_b"])
-            for r in D.minhash_lsh_pairs(docs, hash_mode=mode, salt_k=4).collect()
+            for r in D.minhash_lsh_pairs(df, hash_mode=mode, salt_k=4).collect()
         }
         plain = {
             (r["id_a"], r["id_b"])
-            for r in D.minhash_lsh_pairs(docs, hash_mode=mode, salt_k=1).collect()
+            for r in D.minhash_lsh_pairs(df, hash_mode=mode, salt_k=1).collect()
         }
         assert salted == plain and salted
+        assert not any({20, 21} & set(p) for p in salted), (mode, salted)
 
 
 def test_simhash_np_votes_match_expression_fold(spark, docs):

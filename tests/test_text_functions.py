@@ -222,3 +222,59 @@ def test_gopher_flags_null_text_yields_nulls(spark):
     rows = {r["doc_id"]: r for r in df.select("doc_id", *gopher_flag_cols(F.col("text"))).collect()}
     assert all(v is None for k, v in rows[1].asDict().items() if k != "doc_id")
     assert rows[2]["n_words"] == 80 and rows[2]["ok_stop_words"] == 1
+
+
+# whitespace parity table: (name, char, is Java \s). Java's \s (what
+# Spark's split/regexp_replace on '\s+' use) is exactly the six ASCII
+# controls; the rest are whitespace to Python's str.split()/re \s only.
+WS_PARITY = [
+    ("SP", " ", True), ("TAB", "\t", True), ("LF", "\n", True),
+    ("VT", "\x0b", True), ("FF", "\f", True), ("CR", "\r", True),
+    ("FS", "\x1c", False), ("GS", "\x1d", False), ("RS", "\x1e", False),
+    ("US", "\x1f", False), ("NBSP", "\xa0", False), ("LS", "\u2028", False),
+    ("NEL", "\x85", False),
+]
+
+
+def test_whitespace_kernel_parity_table(spark):
+    """The worker kernel (split_words / normalize_ws) against Spark's
+    '\\s+' and DuckDB's RE2 '\\s+', one row per whitespace-like char;
+    the rolling-hash shingles collapse exactly the Java \\s chars."""
+    from borges_spark.operators.dedup import shingle_hash_frame
+
+    rows = [(i, f"{c}Alpha{c}{c}beta Gamma{c}") for i, (_, c, _) in enumerate(WS_PARITY)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    low = F.lower(F.col("text"))
+    jvm = {
+        r["doc_id"]: (r["toks"], r["norm"])
+        for r in df.select(
+            "doc_id",
+            F.filter(F.split(low, r"\s+"), lambda t: t != "").alias("toks"),
+            F.regexp_replace(low, r"\s+", " ").alias("norm"),
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    duck = {
+        i: (toks, norm)
+        for i, toks, norm in con.execute(
+            "SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> ''), "
+            "regexp_replace(lower(text), '\\s+', ' ', 'g') FROM d"
+        ).fetchall()
+    }
+    # the same text with the char replaced by a space: its shingle-hash
+    # set is equal exactly when the char is whitespace to the JVM
+    spaced = spark.createDataFrame(
+        [(100 + i, t.replace(c, " ")) for (i, t), (_, c, _) in zip(rows, WS_PARITY)],
+        "doc_id long, text string",
+    )
+    hs = {r["doc_id"]: set(r["hs"]) for r in shingle_hash_frame(df.unionByName(spaced)).collect()}
+    for i, (name, c, java_ws) in enumerate(WS_PARITY):
+        t = rows[i][1]
+        kernel = (X.split_words(t), X.normalize_ws(t))
+        assert kernel == jvm[i], name
+        assert (kernel[0] == ["alpha", "beta", "gamma"]) == java_ws, name
+        assert (hs[i] == hs[100 + i]) == java_ws, name
+        # RE2's \s has no VT: the one stated kernel/DuckDB divergence
+        assert (kernel == duck[i]) == (name != "VT"), name
